@@ -64,10 +64,11 @@ class ForwardSecureANNSystem:
         plain_idx = AnnIndex.build(self._base, self.config.lsh(), params=params)
         if sq8:
             plain_idx = plain_idx.with_sq8()
+        bc = self._keys_bc()
         self.encrypted = encrypt_vectors(
-            self._base, self._keys_bc(), self.keys.current_version).persist()
+            self._base, bc, self.keys.current_version).persist()
         self.encrypted.count()
-        self.index = plain_idx.with_encrypted_points(self.encrypted, self._keys_bc())
+        self.index = plain_idx.with_encrypted_points(self.encrypted, bc)
         self._index_epoch += 1
         self.cache.invalidate()
         self.profiler.stop("index_build")
@@ -147,8 +148,10 @@ class ForwardSecureANNSystem:
         self.profiler.start("search")
         fn = search_batch_adaptive if adaptive else search_batch
         res = fn(self.index, q, k=k, sq8_rerank=sq8_rerank,
-                 with_diagnostics=with_diagnostics).persist()
-        res.count()
+                 with_diagnostics=with_diagnostics)
+        if not res.is_cached:       # the adaptive path hands back its
+            res = res.persist()     # first pass already materialized
+            res.count()
         self.profiler.stop("search")
         if self.config.reenc_mode != "off":
             self.tracker.record(res.select("id"))

@@ -146,6 +146,38 @@ def encrypt_vectors_versioned(df: DataFrame, keys_bc, version_col: str,
     return df.select(id_col, version_col, vector_col).mapInPandas(run, schema=schema)
 
 
+def _decrypt_batch(pdf: pd.DataFrame, ciphers: dict, mode: str,
+                   id_col: str) -> tuple[np.ndarray, list, list]:
+    """Decrypt one Arrow batch of encrypted_points rows, each under its
+    recorded key_version → (float64 values of the decrypted rows
+    concatenated, their dims, their row positions in ``pdf``).
+
+    The one per-row loop of both decrypt kernels: every column becomes
+    a Python list once (no pandas/numpy scalar boxing per row) and the
+    plaintexts are joined into one buffer, so the only per-row work is
+    the AES-GCM call itself.  mode='strict' raises on a failed tag or a
+    missing key version; 'skip' drops the row."""
+    bufs, dims, keep = [], [], []
+    rows = zip(pdf[id_col].tolist(), pdf["key_version"].tolist(),
+               pdf["dim"].tolist(), pdf["iv"].tolist(),
+               pdf["ciphertext"].tolist())
+    for i, (pid, kv, dim, iv, ct) in enumerate(rows):
+        try:
+            bufs.append(ciphers[kv].decrypt(iv, ct, _aad(pid, kv, dim)))
+        except KeyError:
+            if mode == "strict":
+                raise KeyError(f"no key for version {kv}") from None
+            continue
+        except InvalidTag:
+            if mode == "strict":
+                raise
+            continue
+        dims.append(dim)
+        keep.append(i)
+    flat = np.frombuffer(b"".join(bufs), dtype=">f8").astype(np.float64)
+    return flat, dims, keep
+
+
 def decrypt_vectors(df: DataFrame, keys_bc, mode: str = "strict",
                     id_col: str = "id", out_col: str = "vector") -> DataFrame:
     """Adds ``out_col ARRAY<DOUBLE>`` decrypted under each row's recorded
@@ -157,30 +189,20 @@ def decrypt_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     out_schema += f", {out_col} ARRAY<DOUBLE>"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cryptography.exceptions import InvalidTag as _InvalidTag
         from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-        keys = keys_bc.value
-        ciphers = {v: _AESGCM(k) for v, k in keys.items()}
+        ciphers = {v: _AESGCM(k) for v, k in keys_bc.value.items()}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            vecs, keep = [], []
-            for i, row in enumerate(zip(pdf[id_col], pdf["key_version"],
-                                        pdf["dim"], pdf["iv"], pdf["ciphertext"])):
-                pid, kv, dim, iv, ct = row
-                aes = ciphers.get(int(kv))
-                try:
-                    if aes is None:
-                        raise KeyError(f"no key for version {kv}")
-                    buf = aes.decrypt(bytes(iv), bytes(ct), _aad(pid, int(kv), int(dim)))
-                    vecs.append(bytes_to_vector(buf).tolist())
-                    keep.append(i)
-                except (_InvalidTag, KeyError):
-                    if mode == "strict":
-                        raise
-            out = pdf.iloc[keep].copy() if len(keep) < len(pdf) else pdf.copy()
-            out[out_col] = vecs
-            yield out[in_cols + [out_col]]
+            flat, dims, keep = _decrypt_batch(pdf, ciphers, mode, id_col)
+            if not keep:
+                continue
+            if min(dims) == max(dims):
+                vecs = list(flat.reshape(len(dims), dims[0]))
+            else:
+                vecs = np.split(flat, np.cumsum(dims[:-1]))
+            out = pdf if len(keep) == len(pdf) else pdf.iloc[keep]
+            yield out[in_cols].assign(**{out_col: vecs})
 
     return df.mapInPandas(run, schema=out_schema)
 
@@ -200,12 +222,19 @@ def decrypt_score_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     fusing removes that exchange and keeps the decrypted matrix in
     numpy (the reference's refine stage is decrypt-bound the same way,
     ``QueryServiceImpl.java:219-271``).  The AESGCM key schedule is
-    built once per (batch, key_version) — not per row.
+    built once per (task, key_version) — not per row.
+
+    Per Arrow batch the only per-row Python work is the AES-GCM call
+    (:func:`_decrypt_batch`): the plaintexts land in one ``(n, d)``
+    matrix, the query matrix is built once per distinct ``q_id`` (the
+    query key every row carries) and gathered to the rows, and the
+    squared differences are summed along each row in place.
 
     Bit-compatibility: the distance accumulates per-dimension
     left-to-right exactly like ``l2_expr``'s fold, so the fused path is
     bit-identical to decrypt-then-score and the ann_search oracle hash
-    is unaffected (equivalence is tested).
+    is unaffected (equivalence is tested, including mixed key versions
+    and skip-mode drops).
 
     Output: input columns minus (dim, iv, ciphertext, ``q_col``) plus
     ``out_col DOUBLE``.  mode='skip' drops undecryptable rows
@@ -218,45 +247,32 @@ def decrypt_score_vectors(df: DataFrame, keys_bc, mode: str = "strict",
     out_schema += f", {out_col} DOUBLE"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from cryptography.exceptions import InvalidTag as _InvalidTag
         from cryptography.hazmat.primitives.ciphers.aead import AESGCM as _AESGCM
-        keys = keys_bc.value
-        ciphers = {v: _AESGCM(k) for v, k in keys.items()}
+        ciphers = {v: _AESGCM(k) for v, k in keys_bc.value.items()}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            n = len(pdf)
-            bufs, keep = [], []
-            for i, row in enumerate(zip(pdf[id_col], pdf["key_version"],
-                                        pdf["dim"], pdf["iv"],
-                                        pdf["ciphertext"])):
-                pid, kv, dim, iv, ct = row
-                aes = ciphers.get(int(kv))
-                try:
-                    if aes is None:
-                        raise KeyError(f"no key for version {kv}")
-                    bufs.append(aes.decrypt(
-                        bytes(iv), bytes(ct), _aad(pid, int(kv), int(dim))))
-                    keep.append(i)
-                except (_InvalidTag, KeyError):
-                    if mode == "strict":
-                        raise
+            flat, dims, keep = _decrypt_batch(pdf, ciphers, mode, id_col)
             if not keep:
                 continue
-            V = np.vstack([np.frombuffer(b, dtype=">f8") for b in bufs]) \
-                .astype(np.float64)
-            sel = pdf.iloc[keep] if len(keep) < n else pdf
-            Qm = np.vstack([np.asarray(v, dtype=np.float64)
-                            for v in sel[q_col].to_numpy()])
-            # per-dimension left-to-right accumulation: bit-identical
-            # to l2_expr's aggregate fold (pairwise/np.sum order could
-            # flip a 6-dp rounding boundary under the oracle hash)
-            acc = np.zeros(len(keep), dtype=np.float64)
-            for j in range(V.shape[1]):
-                d = V[:, j] - Qm[:, j]
-                acc += d * d
-            out = sel[carry].copy()
-            out[out_col] = np.sqrt(acc)
-            yield out
+            sel = pdf if len(keep) == len(pdf) else pdf.iloc[keep]
+            _, first, inv = np.unique(sel["q_id"].to_numpy(),
+                                      return_index=True, return_inverse=True)
+            qvecs = sel[q_col].to_numpy()
+            Q = np.vstack([np.asarray(qvecs[j], dtype=np.float64)
+                           for j in first])
+            d = Q.shape[1]
+            if min(dims) != d or max(dims) != d:
+                raise ValueError(f"payload dims {min(dims)}..{max(dims)} "
+                                 f"do not match query dim {d}")
+            D = Q[inv]
+            np.subtract(flat.reshape(len(keep), d), D, out=D)
+            D *= D
+            # per-dimension left-to-right accumulation (accumulate is
+            # the recurrence r[j] = r[j-1] + D[:, j]): bit-identical to
+            # l2_expr's aggregate fold, where pairwise np.sum could flip
+            # a 6-dp rounding boundary under the oracle hash
+            np.add.accumulate(D, axis=1, out=D)
+            yield sel[carry].assign(**{out_col: np.sqrt(D[:, -1])})
 
     return df.mapInPandas(run, schema=out_schema)

@@ -11,14 +11,28 @@ idiomatic win).  Physical shape (SURVEY §4):
             hamming-ranked multi-probe, O2/O3)                 map-side
           → join codes table on (table, division, part_idx)    shuffle 1
           → groupBy (q_id, id) min(partition hamming)  (J2/A1)
+          → repartition(defaultParallelism, q_id)               shuffle 2
           → per-query ranked-hamming prefilter, LIMIT refinement (F4/O5)
           → join point payloads on id (J1), decrypt if encrypted (C5)
-          → exact L2 (C1) → per-query window rank ≤ K (A2)     shuffle 2
-          → results (q_id, id, distance, rank)
+          → exact L2 (C1) → per-query window rank ≤ K (A2)     shuffle 3
+          → coalesce(defaultParallelism) → results (q_id, id, distance, rank)
 
 The decrypt/score stage runs strictly after the refinement limit — the
 plan is shaped so Catalyst cannot float the expensive UDF above the
 cheap hamming cut (SURVEY §4 "predicate ordering").
+
+Shuffle 2 is pinned in :func:`search_batch`, right after the min-merge:
+it is the q_id exchange the prefilter window needs anyway, given an
+explicit partition count of one per task slot.  Left to
+ENSURE_REQUIREMENTS, AQE coalesces that exchange by BYTES, and a 100-query
+batch's candidate rows (a few MiB of ids and hamming distances) fit one
+partition — so the prefilter, both broadcast joins (payloads, query
+vectors) and the CPU-bound decrypt+score kernel ran in ONE task while
+the other slots sat idle.  A repartition with a number is never
+coalesced.  The rank window after the kernel shuffles again (the Python
+kernel does not report its output partitioning), and the coalesce sits
+after its rank filter so the partial top-K before that exchange
+(``WindowGroupLimit``) stays in the plan.
 """
 
 from __future__ import annotations
@@ -29,7 +43,7 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from ..lsh.coding import code_vectors, code_family, _popcount, with_hamming
@@ -724,6 +738,11 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
             allow.select(F.col(allow_id_col).alias("id")).distinct(),
             on="id", how="leftsemi")
 
+    # shuffle 2 of the module docstring: one q_id partition per task
+    # slot, so AQE cannot coalesce the CPU-bound refine into one task
+    n_slots = cand.sparkSession.sparkContext.defaultParallelism
+    cand = cand.repartition(n_slots, "q_id")
+
     wq = Window.partitionBy("q_id")
     if with_diagnostics:
         cand = cand.withColumn("_cand_raw", F.count(F.lit(1)).over(wq))
@@ -772,16 +791,28 @@ def search_batch(index: AnnIndex, queries: DataFrame, k: int = 10,
     out_cols = ["q_id", "id", "distance", "rank"]
     if with_diagnostics:
         out_cols += ["_cand_raw", "_cand_kept", "_cand_decrypted"]
+    # coalesce AFTER the rank filter: the partial per-query top-k
+    # (WindowGroupLimit) then still runs before the exchange
     return (scored.withColumn("rank", F.row_number().over(wr))
             .filter(F.col("rank") <= k)
-            .select(*out_cols))
+            .select(*out_cols)
+            .coalesce(n_slots))
 
 
 def search_batch_adaptive(index: AnnIndex, queries: DataFrame, k: int = 10,
                           **kw) -> DataFrame:
     """O6 adaptive retry: one extra pass with the wider probe budget for
     queries that returned fewer than k rows (reference
-    ``QueryServiceImpl.needRetry:444-447``).
+    ``QueryServiceImpl.needRetry:444-447``) — including queries that
+    returned none (all candidates tombstoned, outside ``allow``, or
+    dropped by skip-mode decrypt).
+
+    The first pass is persisted and materialized by ONE action: its row
+    count, compared with k times the query count that an
+    :class:`~pyspark.sql.Observation` on the query side of the same
+    plan reports.  When every query is full (the common case) that
+    materialized result is returned as is; otherwise the union with the
+    retry pass is returned lazily.
 
     ``probe_override <= 0`` disables the retry entirely (reference
     ``RuntimeConfig.probeOverride = -1`` default — the PAPER_BASELINE
@@ -789,14 +820,17 @@ def search_batch_adaptive(index: AnnIndex, queries: DataFrame, k: int = 10,
     heuristic; see ``configs/example.json`` profile ``paper_baseline``)."""
     if index.params.cfg.probe_override <= 0:
         return search_batch(index, queries, k=k, **kw)
-    first = search_batch(index, queries, k=k, **kw).persist()
-    counts = first.groupBy("q_id").count()
-    under = counts.filter(F.col("count") < k).select("q_id")
-    missing = queries.join(under.withColumnRenamed("q_id", "_u"),
-                           queries["q_id"] == F.col("_u"), "left_semi")
-    if missing.limit(1).count() == 0:
+    q_id_col = kw.get("q_id_col", "q_id")
+    n_q = Observation()
+    first = search_batch(
+        index, queries.observe(n_q, F.count(F.lit(1)).alias("n")),
+        k=k, **kw).persist()
+    if first.count() == k * n_q.get["n"]:
         return first
+    full = (first.groupBy("q_id").count().filter(F.col("count") >= k)
+            .select("q_id"))
+    missing = queries.join(full.withColumnRenamed("q_id", q_id_col),
+                           on=q_id_col, how="left_anti")
     retry = search_batch(index, missing, k=k,
                          probes=index.params.cfg.probe_override, **kw)
-    kept = first.join(under, on="q_id", how="left_anti")
-    return kept.unionByName(retry)
+    return first.join(full, on="q_id", how="left_semi").unionByName(retry)

@@ -72,6 +72,29 @@ def test_adaptive_retry_fills_underfilled(index, queries):
     assert all(r["count"] == 10 for r in counts)
 
 
+def test_adaptive_retry_reaches_first_pass_empty_queries(spark, index, queries):
+    """A query whose first pass returns NO row is retried too: here an
+    allow-list holds only ids that the wider probe_override probes reach
+    and the default probes do not, so the first pass of that query is
+    empty and only the retry can answer it."""
+    idx, _, _ = index
+    cfg = idx.params.cfg
+    victim = queries.first().q_id
+    one = queries.filter(F.col("q_id") == victim)
+
+    def reach(probes):
+        return {r.id for r in search_batch(idx, one, k=2000, probes=probes,
+                                           refinement_limit=2000).collect()}
+
+    only_wide = reach(cfg.probe_override) - reach(cfg.probes)
+    assert only_wide
+    allow = spark.createDataFrame([(i,) for i in sorted(only_wide)], "id LONG")
+    assert search_batch(idx, one, k=10, allow=allow).count() == 0
+    res = search_batch_adaptive(idx, queries, k=10, allow=allow)
+    got = {r.id for r in res.filter(F.col("q_id") == victim).collect()}
+    assert got and got <= only_wide
+
+
 def test_evaluate_headline(index, queries):
     idx, df, _ = index
     res = search_batch(idx, queries, k=10)
@@ -531,10 +554,14 @@ def test_fused_decrypt_score_bit_identical_to_split(spark, clustered, queries):
     to the split plan (decrypt_vectors → l2_expr fold) — same rows, same
     distances to the last ulp, so oracle hashes and rank ties cannot
     move.  The split plan stays reachable via _keys_bc=None (the legacy
-    decrypt_fn path)."""
+    decrypt_fn path).  Covered: one key version, a store holding two key
+    versions after rotation, a tampered row under skip and strict mode,
+    SQ8 compressed refine, and Arrow batches that each hold several
+    queries with queries straddling batch boundaries."""
     from dataclasses import replace
     from fspann_query_system_spark.crypto.keys import KeyManager
     from fspann_query_system_spark.crypto.aes import encrypt_vectors
+    from fspann_query_system_spark.crypto.reencrypt import reencrypt_touched
 
     df, X = clustered
     km = KeyManager(master=bytes(32))
@@ -542,19 +569,62 @@ def test_fused_decrypt_score_bit_identical_to_split(spark, clustered, queries):
     enc = encrypt_vectors(df, bc, 1)
     cfg = LshConfig(dim=16, m=8, lam=2, tables=3, divisions=2, block_size=32,
                     probes=4, refinement_limit=300, seed=9)
-    fused = AnnIndex.build(df, cfg).with_encrypted_points(enc, bc, mode="skip")
-    assert fused._keys_bc is not None
-    split = replace(fused, _keys_bc=None)
-    r_fused = search_batch(fused, queries, k=8).orderBy("q_id", "rank").collect()
-    r_split = search_batch(split, queries, k=8).orderBy("q_id", "rank").collect()
-    assert [tuple(r) for r in r_fused] == [tuple(r) for r in r_split]
-    assert len(r_fused) > 0
+    plain = AnnIndex.build(df, cfg)
+
+    def both(idx, q=queries, **kw):
+        assert idx._keys_bc is not None
+        fused = search_batch(idx, q, k=8, **kw).orderBy("q_id", "rank")
+        split = search_batch(replace(idx, _keys_bc=None), q, k=8, **kw) \
+            .orderBy("q_id", "rank")
+        r_fused = [tuple(r) for r in fused.collect()]
+        assert r_fused == [tuple(r) for r in split.collect()]
+        assert len(r_fused) > 0
+        return r_fused
+
+    both(plain.with_encrypted_points(enc, bc, mode="skip"))
+
+    # (a) two key versions: rotate, migrate half the rows to version 2
+    v2 = km.rotate()
+    bc2 = spark.sparkContext.broadcast(km.key_map())
+    enc2 = reencrypt_touched(enc, df.filter(F.col("id") % 2 == 0).select("id"),
+                             bc2, v2).persist()
+    assert {r.key_version for r in
+            enc2.select("key_version").distinct().collect()} == {1, v2}
+    both(plain.with_encrypted_points(enc2, bc2, mode="skip"))
+
+    # (b) one tampered ciphertext: the nearest stored point of a query
+    # (its own id) loses its last byte, so the GCM tag check fails
+    victim = queries.first().q_id
+    tampered = enc2.withColumn(
+        "ciphertext",
+        F.when(F.col("id") == victim,
+               F.expr("substring(ciphertext, 1, length(ciphertext) - 1)"))
+        .otherwise(F.col("ciphertext")))
+    rows = both(plain.with_encrypted_points(tampered, bc2, mode="skip"))
+    assert victim not in {r[1] for r in rows}
+    assert victim in {r[1] for r in both(
+        plain.with_encrypted_points(enc2, bc2, mode="skip"))}
+    strict = plain.with_encrypted_points(tampered, bc2, mode="strict")
+    for idx in (strict, replace(strict, _keys_bc=None)):
+        with pytest.raises(Exception, match="InvalidTag"):
+            search_batch(idx, queries, k=8).collect()
+
+    # (c) 120 queries through Arrow batches of 1000 rows: each batch
+    # gathers several queries' vectors and some queries span two batches
+    rng = np.random.default_rng(5)
+    many = spark.createDataFrame(
+        [(1000 + j, (X[i] + rng.normal(0, 0.05, 16)).tolist())
+         for j, i in enumerate(rng.choice(len(X), 120, replace=False))],
+        "q_id LONG, vector ARRAY<DOUBLE>")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "1000")
+    try:
+        both(plain.with_encrypted_points(enc2, bc2, mode="skip"), q=many)
+    finally:
+        spark.conf.set(key, before)
+
     # fused path also composes with SQ8 compressed refine + diagnostics
     idx8 = AnnIndex.build(df, cfg).with_sq8() \
         .with_encrypted_points(enc, bc, mode="skip")
-    r8f = search_batch(idx8, queries, k=8, sq8_rerank=4,
-                       with_diagnostics=True).orderBy("q_id", "rank").collect()
-    r8s = search_batch(replace(idx8, _keys_bc=None), queries, k=8,
-                       sq8_rerank=4, with_diagnostics=True) \
-        .orderBy("q_id", "rank").collect()
-    assert [tuple(r) for r in r8f] == [tuple(r) for r in r8s]
+    both(idx8, sq8_rerank=4, with_diagnostics=True)

@@ -66,6 +66,14 @@ def test_df_encrypt_decrypt_roundtrip(spark, km):
     out = {r.id: r.vector for r in dec.collect()}
     for i in range(50):
         assert np.allclose(out[i], X[i])
+    # vectors of different lengths in one batch come back at their own
+    # length, bit for bit
+    ragged = spark.createDataFrame(
+        [(i, X[i][:3 + i % 5].tolist()) for i in range(50)],
+        "id LONG, vector ARRAY<DOUBLE>").coalesce(1)
+    enc = encrypt_vectors(ragged, bc, km.current_version)
+    out = {r.id: r.vector for r in decrypt_vectors(enc, bc).collect()}
+    assert out == {i: X[i][:3 + i % 5].tolist() for i in range(50)}
 
 
 def test_forward_security_game(spark, tmp_path):

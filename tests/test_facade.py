@@ -325,3 +325,76 @@ def test_search_cached_restamps_q_id_for_same_vector(spark):
     assert sys_.cache.hits >= 1
     assert {r.q_id for r in r2} == {77}            # re-stamped, not q_id=1
     assert sorted((r.id, r.rank) for r in r2) == sorted((r.id, r.rank) for r in r1)
+
+
+# jobs of one warm facade search() plus collect() on the fixture below:
+# the first pass materialized by its own count (AQE runs each shuffle and
+# broadcast stage as a job), then the collect of the persisted result
+SEARCH_JOB_BUDGET = 10
+
+
+def test_search_job_budget_and_refine_parallelism(spark, clustered,
+                                                  monkeypatch):
+    """Deterministic guard on the flagship read path that wall-clock
+    noise cannot hide: one warm ``search()`` runs at most
+    SEARCH_JOB_BUDGET Spark jobs (counted by job group through the
+    status tracker), and its fused decrypt+score stage runs on every
+    task slot — one task with rows per slot when the queries cover
+    every slot."""
+    from fspann_query_system_spark.crypto import aes
+
+    df, X = clustered
+    sc = spark.sparkContext
+    cfg = SystemConfig(dim=16, m=8, lam=2, tables=4, divisions=2,
+                       block_size=32, refinement_limit=400,
+                       rotation_max_ops=10**9, top_k=10)
+    sys_ = ForwardSecureANNSystem(spark, cfg, master_key=b"\x55" * 32)
+    sys_.index_vectors(df)
+    # one query per task slot: search_batch hash-partitions candidates
+    # by q_id into defaultParallelism partitions (Spark's hash() with
+    # pmod is the partitioner's own placement), so pick the smallest id
+    # landing in each partition
+    slots = sc.defaultParallelism
+    placed = (df.select("id", F.pmod(F.hash("id"), F.lit(slots)).alias("p"))
+              .groupBy("p").agg(F.min("id").alias("id")).collect())
+    ids = sorted(r.id for r in placed)
+    assert len(ids) == slots
+
+    def frame():
+        # a new DataFrame per call, as a client sends one: re-running
+        # one DataFrame could read the persisted result of the last call
+        return spark.createDataFrame(
+            [(i, (X[i] + 0.01).tolist()) for i in ids],
+            "q_id LONG, vector ARRAY<DOUBLE>")
+
+    sys_.search(frame()).collect()  # warm: routing broadcast, bounds count
+    sc.setJobGroup("search-budget", "search-budget")
+    try:
+        rows = sys_.search(frame()).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("search-budget")
+    assert len(rows) == 10 * len(ids)
+    assert len(jobs) <= SEARCH_JOB_BUDGET, len(jobs)
+
+    # count the kernel stage's tasks that scored rows: a pass-through
+    # kernel fused onto the decrypt+score output runs in the same tasks
+    scored = sc.accumulator(0)
+    real = aes.decrypt_score_vectors
+
+    def tapped(*a, **kw):
+        out = real(*a, **kw)
+
+        def tap(batches):
+            n = 0
+            for b in batches:
+                n += len(b)
+                yield b
+            if n:
+                scored.add(1)
+        return out.mapInPandas(tap, schema=out.schema)
+
+    monkeypatch.setattr(aes, "decrypt_score_vectors", tapped)
+    assert sys_.search(frame()).count() == 10 * len(ids)
+    assert scored.value >= min(slots, len(ids)), (scored.value, slots)
